@@ -24,6 +24,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import pyworker
+
 # Trailing-\r-before-\n collapses to \n: equivalent to per-line
 # bytes.TrimRight(line, "\r\n") after splitting on \n (file_reader.go:80).
 _CRLF = re.compile(rb"\r+\n")
@@ -259,6 +261,7 @@ def extract_documents(
         _KERNEL_CHOICE["use_vectorized"] = vec_bps > _VEC_WIN_MARGIN * loop_bps
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.install()
         if max_length > 0 or _mode == "0":
             use_vectorized = False
         elif _mode == "1":
@@ -315,6 +318,7 @@ def explode_lines(
     """
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.install()
         for batch in batches:
             keys = batch.column(key_col).to_pylist()
             html = batch.column(html_col).to_pylist()

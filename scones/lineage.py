@@ -27,6 +27,7 @@ so ``format("iceberg")`` drops in.
 
 from __future__ import annotations
 
+import errno
 import glob as globmod
 import os
 import threading
@@ -55,6 +56,12 @@ _EPOCH_LOCK = threading.Lock()
 #: it may belong to a slow in-flight commit (e.g. the watchdog's
 #: abandoned attempt racing the retry; round-4 ADVICE, low).
 TMP_REAP_GRACE_SEC = 300.0
+
+# os.link errnos meaning "this filesystem has no hard links here": only
+# these fall back to the rename publish; any other error fails the commit.
+_NO_HARDLINK_ERRNOS = frozenset(
+    {errno.EPERM, errno.EOPNOTSUPP, errno.ENOTSUP, errno.EMLINK, errno.EXDEV}
+)
 
 
 class StaleAttemptError(RuntimeError):
@@ -230,7 +237,14 @@ class LineageStore:
                     f"refusing commit of snapshot {snapshot_id}: "
                     "already published (concurrent writer)"
                 ) from None
-            except OSError:
+            except OSError as e:
+                if e.errno not in _NO_HARDLINK_ERRNOS:
+                    # e.g. ENOSPC, EIO: fail the commit, publish nothing
+                    try:
+                        os.remove(tmp)
+                    except OSError:
+                        pass
+                    raise
                 # filesystem without hard links: keep the (process-local
                 # fenced) rename path rather than failing the commit
                 os.replace(tmp, final)

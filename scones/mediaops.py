@@ -24,6 +24,8 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from . import pyworker
+
 MEDIA_FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, "
     "feature_fp string, width int, height int"
@@ -71,6 +73,7 @@ def extract_media_features(
     chosen = decoder or _decoder or default_decoder
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             feats = [
                 chosen(bytes(b) if b is not None else b"", t)
@@ -106,6 +109,7 @@ def sample_frames(
     from collections.abc import Iterator as _It
 
     def run(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for doc_id, payload in zip(pdf[id_col], pdf[media_col]):

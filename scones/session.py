@@ -29,6 +29,26 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS = 16_384
 
 
+def _default_driver_mem() -> str:
+    """A quarter of the memory this process may use, capped at 12g.
+
+    The heap is pre-touched at JVM start (below), so it must leave room
+    for the Python workers, the OS and any second JVM a caller starts:
+    the limit is min(cgroup limit, physical memory).
+    """
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" = unlimited)
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as fh:
+                limits.append(int(fh.read()))
+        except (OSError, ValueError):
+            pass
+    return f"{min(min(limits) // 4 // 2**20, 12 * 1024)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "scones",
@@ -40,6 +60,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to 2× the local core count — on a real
     cluster you'd size this to total executor cores (AQE coalesces down).
+    The driver heap is ``$SCONES_DRIVER_MEM`` if set, else a quarter of
+    the available memory (see :func:`_default_driver_mem`).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -49,7 +71,7 @@ def get_spark(
         n = n.split(",")[0]  # local[N,maxFailures] form
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
 
-    mem = os.environ.get("SCONES_DRIVER_MEM", "12g")
+    mem = os.environ.get("SCONES_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

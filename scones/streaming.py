@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import pyworker
 from .config import PipelineConfig
 from .enrich import enrich_broadcast, with_host
 from .extract import extract_documents
@@ -167,6 +168,7 @@ def stateful_sessionize(events, gap_sec: int = 1800, watermark: str = "1 second"
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def fn(key, pdfs, state):
+        pyworker.install()
         (user_id,) = key
         ts = []
         for pdf in pdfs:

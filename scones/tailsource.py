@@ -27,11 +27,12 @@ emittable lines but still advanced produces one sentinel row
 (line IS NULL) so the advance can be committed.  Data readers filter
 ``line IS NOT NULL``.
 
-Scale note: one work unit = one task.  Parallelism comes from the file
-count — same as the reference, which also reads each file with a single
-sequential reader.  Giant single files would be split by planning
-multiple (file, start, end) ranges aligned to newline scans; not needed
-for log-shipping workloads.
+Scale note: one work unit = one sequential reader, as in the reference,
+which reads each file with a single reader.  Units are spread over
+min(units, defaultParallelism) tasks with no shuffle, so a task frames
+several units in turn and parallelism comes from the file count up to one
+task per core.  Giant single files are split into multiple
+(file, start, end) ranges aligned to newline scans (``max_range_bytes``).
 """
 
 from __future__ import annotations
@@ -44,6 +45,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import pyworker
 from .lineage import LineageStore
 
 LINE_SCHEMA = (
@@ -117,106 +119,103 @@ def read_tail(
     """
     units = split_work_units(work, max_range_bytes)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            paths = batch.column("src_file").to_pylist()
-            starts = batch.column("start").to_pylist()
-            ends = batch.column("end").to_pylist()
-            aligneds = batch.column("aligned").to_pylist()
-            out_f: list[str] = []
-            out_l: list[bytes | None] = []
-            out_h: list[int] = []
-            out_n: list[int] = []
-            out_fe: list[int] = []
-            out_br: list[int] = []
-            out_us: list[int] = []  # planned unit start: the per-unit key
-            # for exact I/O accounting when range splitting is on (two
-            # units of one file can read identical byte counts, so
-            # bytes_read alone can't identify a unit — round-2 advice)
-            for path, start, end, aligned in zip(paths, starts, ends, aligneds):
-                # the Seek contract: read ONLY the planned byte range
-                # (+1 sync byte for non-aligned units, + overshoot to
-                # finish the straddling last owned line)
-                read_from = start if aligned else start - 1
-                with open(path, "rb") as fh:
-                    fh.seek(read_from)
-                    buf = fh.read(end - read_from)
-                    # extend until the newline that terminates the line
-                    # containing byte end-1 (the straddler) is in view
-                    while buf.find(b"\n", max(end - read_from - 1, 0)) < 0:
-                        more = fh.read(1 << 20)
-                        if not more:
-                            break
-                        buf += more
-                bytes_read = len(buf)
-                cursor = 0
-                if not aligned:
-                    # first owned line starts after the first newline at
-                    # abs pos >= start-1 (TextInputFormat ownership rule)
-                    nl0 = buf.find(b"\n")
-                    if nl0 < 0 or read_from + nl0 + 1 >= end:
-                        continue  # no line starts inside this unit
-                    cursor = nl0 + 1
-                pos = read_from + cursor  # absolute framed position
-                unit_start = pos
-                line_no = 0
-                emitted_before = len(out_f)
-                while read_from + cursor < end:
-                    nl = buf.find(b"\n", cursor)
-                    if nl < 0:
-                        break  # partial tail at EOF: not emitted
-                    raw_len = nl + 1 - cursor
-                    pos += raw_len
-                    if not (max_length > 0 and raw_len > max_length):
-                        out_f.append(path)
-                        out_l.append(buf[cursor:nl].rstrip(b"\r\n"))
-                        out_h.append(pos)
-                        line_no += 1
-                        out_n.append(line_no)
-                    cursor = nl + 1
-                frame_end = pos  # after last complete owned line
-                n_emitted = len(out_f) - emitted_before
-                if n_emitted == 0:
-                    if frame_end > unit_start:
-                        # all-owned-lines-skipped: sentinel row carries
-                        # the advance so the offset still commits
-                        out_f.append(path)
-                        out_l.append(None)
-                        out_h.append(unit_start)
-                        out_n.append(0)
-                    else:
-                        continue  # nothing owned/complete in this unit
-                    out_fe.append(frame_end)
-                    out_br.append(bytes_read)
-                    out_us.append(start)
-                else:
-                    out_fe.extend([frame_end] * n_emitted)
-                    out_br.extend([bytes_read] * n_emitted)
-                    out_us.extend([start] * n_emitted)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_f, pa.string()),
-                    pa.array(out_l, pa.binary()),
-                    pa.array(out_h, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_fe, pa.int64()),
-                    pa.array(out_br, pa.int64()),
-                    pa.array(out_us, pa.int64()),
-                ],
-                [
-                    "src_file",
-                    "line",
-                    "hwm",
-                    "line_no",
-                    "frame_end",
-                    "bytes_read",
-                    "unit_start",
-                ],
-            )
+    def frame_unit(
+        path: str, start: int, end: int, aligned: bool
+    ) -> pa.RecordBatch | None:
+        # the Seek contract: read ONLY the planned byte range
+        # (+1 sync byte for non-aligned units, + overshoot to
+        # finish the straddling last owned line)
+        read_from = start if aligned else start - 1
+        with open(path, "rb") as fh:
+            fh.seek(read_from)
+            buf = fh.read(end - read_from)
+            # extend until the newline that terminates the line
+            # containing byte end-1 (the straddler) is in view
+            while buf.find(b"\n", max(end - read_from - 1, 0)) < 0:
+                more = fh.read(1 << 20)
+                if not more:
+                    break
+                buf += more
+        bytes_read = len(buf)
+        cursor = 0
+        if not aligned:
+            # first owned line starts after the first newline at
+            # abs pos >= start-1 (TextInputFormat ownership rule)
+            nl0 = buf.find(b"\n")
+            if nl0 < 0 or read_from + nl0 + 1 >= end:
+                return None  # no line starts inside this unit
+            cursor = nl0 + 1
+        pos = read_from + cursor  # absolute framed position
+        unit_start = pos
+        out_l: list[bytes | None] = []
+        out_h: list[int] = []
+        while read_from + cursor < end:
+            nl = buf.find(b"\n", cursor)
+            if nl < 0:
+                break  # partial tail at EOF: not emitted
+            raw_len = nl + 1 - cursor
+            pos += raw_len
+            if not (max_length > 0 and raw_len > max_length):
+                out_l.append(buf[cursor:nl].rstrip(b"\r\n"))
+                out_h.append(pos)
+            cursor = nl + 1
+        frame_end = pos  # after last complete owned line
+        out_n = list(range(1, len(out_l) + 1))
+        if not out_l:
+            if frame_end == unit_start:
+                return None  # nothing owned/complete in this unit
+            # all-owned-lines-skipped: sentinel row carries the
+            # advance so the offset still commits
+            out_l, out_h, out_n = [None], [unit_start], [0]
+        n = len(out_l)
+        # unit_start (the planned start) is the per-unit key for exact I/O
+        # accounting when range splitting is on: two units of one file can
+        # read identical byte counts, so bytes_read alone can't identify a
+        # unit (round-2 advice)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([path] * n, pa.string()),
+                pa.array(out_l, pa.binary()),
+                pa.array(out_h, pa.int64()),
+                pa.array(out_n, pa.int64()),
+                pa.array([frame_end] * n, pa.int64()),
+                pa.array([bytes_read] * n, pa.int64()),
+                pa.array([start] * n, pa.int64()),
+            ],
+            [
+                "src_file",
+                "line",
+                "hwm",
+                "line_no",
+                "frame_end",
+                "bytes_read",
+                "unit_start",
+            ],
+        )
 
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.install()
+        # one output batch per unit: a task frames several units, and
+        # Python memory stays bounded by one unit's bytes
+        for batch in batches:
+            for unit in zip(
+                *(
+                    batch.column(c).to_pylist()
+                    for c in ("src_file", "start", "end", "aligned")
+                )
+            ):
+                out = frame_unit(*unit)
+                if out is not None:
+                    yield out
+
+    # one task per core, not per unit, and no Exchange: the local rows are
+    # sliced over defaultParallelism partitions, and the coalesce drops the
+    # empty ones (each would still start a Python task) when there are
+    # fewer units than cores.  The fixed per-task cost is paid once per core.
+    n_tasks = max(min(len(units), spark.sparkContext.defaultParallelism), 1)
     plan_df = spark.createDataFrame(
         units, "src_file string, start bigint, end bigint, aligned boolean"
-    ).repartition(max(len(units), 1))
+    ).coalesce(n_tasks)
     return plan_df.mapInArrow(run, LINE_SCHEMA)
 
 
@@ -273,7 +272,9 @@ def run_tail_snapshot(
     agg = (
         written.groupBy("src_file", "unit_start")
         .agg(
-            F.count(F.col("line")).alias("n"),  # sentinels don't count
+            # sentinels (line_no = 0) don't count; line_no > 0 keeps the
+            # read-back off the line payload
+            F.count(F.when(F.col("line_no") > 0, 1)).alias("n"),
             F.max("frame_end").alias("frame_end"),
             F.max("bytes_read").alias("bytes_read"),
         )

@@ -35,6 +35,8 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from . import pyworker
+
 WARC_DOC_DDL = (
     "url string, warc_ts timestamp, html binary, lang string, "
     "src_file string, record_offset bigint"
@@ -215,6 +217,7 @@ def warc_shard_stats(spark: SparkSession, glob: str) -> DataFrame:
     from .lineage import normalize_path
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.install()
         for batch in batches:
             paths = batch.column("path").to_pylist()
             contents = batch.column("content").to_pylist()
@@ -248,6 +251,7 @@ def read_warc(spark: SparkSession, glob: str) -> DataFrame:
     from .lineage import normalize_path
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.install()
         for batch in batches:
             paths = batch.column("path").to_pylist()
             contents = batch.column("content").to_pylist()

@@ -279,11 +279,14 @@ def test_watchdog_real_session_rebuild_subprocess(tmp_path):
         "repo": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "base": str(tmp_path),
     }
+    # a small heap: this subprocess runs two JVMs (old and rebuilt) beside
+    # the suite's shared one, and each pre-touches its whole heap
     out = subprocess.run(
         [sys.executable, "-c", script],
         capture_output=True,
         text=True,
         timeout=420,
+        env={**os.environ, "SCONES_DRIVER_MEM": "1g"},
     )
     assert out.returncode == 0, out.stderr[-4000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])

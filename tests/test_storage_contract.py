@@ -16,8 +16,11 @@ Contract surface (what a swap must provide):
   * metadata:     committed_snapshots / processed_files / next_snapshot_id
 """
 
+import errno
 import inspect
 import os
+
+import pytest
 
 from scones import lineage
 from scones.lineage import LineageStore, plan_new_files, read_committed, vacuum_orphans
@@ -92,6 +95,39 @@ def test_commit_publish_is_atomic_and_crash_clean(tmp_path):
     names = sorted(os.listdir(store.dir))
     assert names == ["snapshot_000000000001.parquet"]  # no tmp debris
     assert store.committed_snapshots() == [1]
+
+
+@pytest.mark.parametrize(
+    "err, published", [(errno.ENOSPC, False), (errno.EXDEV, True)]
+)
+def test_commit_link_error_fails_unless_no_hardlinks(
+    tmp_path, monkeypatch, err, published
+):
+    """Only "no hard links here" errnos fall back to the rename publish;
+    any other os.link failure (a full disk) fails the commit and
+    publishes no manifest."""
+
+    def failing_link(src, dst):
+        raise OSError(err, os.strerror(err))
+
+    monkeypatch.setattr(lineage.os, "link", failing_link)
+    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    row = {
+        "snapshot_id": 1,
+        "src_file": "/in/a.parquet",
+        "offset_start": 0,
+        "offset_end": 10,
+        "row_count": 1,
+    }
+    if published:
+        store.commit(1, [row])
+        assert store.committed_snapshots() == [1]
+    else:
+        with pytest.raises(OSError) as exc:
+            store.commit(1, [row])
+        assert exc.value.errno == err
+        assert store.committed_snapshots() == []
+        assert os.listdir(store.dir) == []  # no manifest, no tmp debris
 
 
 def test_reader_sees_only_committed_state(spark, tmp_path):

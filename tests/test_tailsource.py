@@ -7,7 +7,12 @@ file_reader_test.go golden numbers) to the Spark tail source.
 import pytest
 
 from scones.lineage import LineageStore
-from scones.tailsource import plan_tail_work, run_tail_snapshot
+from scones.tailsource import (
+    plan_tail_work,
+    read_tail,
+    run_tail_snapshot,
+    split_work_units,
+)
 
 N_SINKS = 2
 
@@ -222,11 +227,15 @@ def test_range_split_framing_equals_single_unit(spark, tmp_path):
         got = run_variant(f"ranged{mrb}", mrb)
         assert got == base, f"range split {mrb} diverged"
 
+    # more units than cores: several units share a task, with no shuffle
+    path = str(tmp_path / "single" / "logs" / "big.log")
+    assert len(split_work_units([(path, 0)], 64)) > spark.sparkContext.defaultParallelism
+    plan = read_tail(spark, [(path, 0)], max_length=16, max_range_bytes=64)
+    assert "Exchange" not in plan._jdf.queryExecution().executedPlan().toString()
+
 
 def test_range_split_parallelizes_one_file(spark, tmp_path):
     """A single file splits into multiple work units."""
-    from scones.tailsource import split_work_units
-
     logs = tmp_path / "logs"
     logs.mkdir()
     f = logs / "wide.log"
