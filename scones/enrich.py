@@ -26,6 +26,13 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("host", F.parse_url(F.col(url_col), F.lit("HOST")))
 
 
+def with_static_fields(df: DataFrame, fields: dict) -> DataFrame:
+    """Merge constant ``fields`` into every row (≈ config.go:41 ``fields``);
+    like the reference (file_reader.go:112-117), a field named like an
+    existing column overwrites it."""
+    return df.withColumns({k: F.lit(v) for k, v in fields.items()}) if fields else df
+
+
 def enrich_broadcast(
     df: DataFrame, host_meta: DataFrame, url_col: str = "url"
 ) -> DataFrame:

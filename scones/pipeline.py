@@ -21,16 +21,19 @@ retry channel (O12), the scheduler replaces the reader pool (O13).
 from __future__ import annotations
 
 import os
+import shutil
+import time
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
-from .enrich import enrich_broadcast, with_host
+from .enrich import enrich_broadcast, with_host, with_static_fields
 from .extract import extract_documents
 from .lineage import LineageStore, lineage_rows_for, plan_new_files
 from .metrics import observed
-from .route import with_sink_id
+from .route import spread_expr, with_sink_id
 
 
 def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
@@ -40,14 +43,11 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
     default): a snapshot whose input is small relative to the cluster
     would plan fewer splits than cores and leave most of them idle (the
     no-shuffle pipeline's write parallelism == scan parallelism).  Clamp
-    the split size so the scan yields ≈2 splits per core, never above
+    the split size so the scan yields ≈1 split per core, never above
     the 128 MB default (at 100 TB the clamp is a no-op) and never below
-    4 MB (tiny splits = per-task overhead).  On an object store the
-    byte total would come from the table catalog, not os.stat.
+    16 MB.  On an object store the byte total would come from the table
+    catalog, not os.stat.
     """
-    per_core = float(os.environ.get("SCONES_SPLITS_PER_CORE", "1"))
-    if per_core <= 0:
-        return
     total = 0
     for f in files:
         try:
@@ -56,7 +56,6 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
             return  # non-local input: keep defaults
     cores = spark.sparkContext.defaultParallelism
     open_cost = 256 << 10
-    splits = max(per_core * cores, 1)
     # 16 MB floor: tasks smaller than that are dominated by fixed
     # per-task cost (python worker handshake, 1 parquet writer per sink,
     # zstd context) — measured 1.4x slower at bench scale.  128 MB
@@ -64,7 +63,7 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
     # function is a no-op.
     target = min(
         128 << 20,
-        max(16 << 20, int((total + len(files) * open_cost) / splits)),
+        max(16 << 20, (total + len(files) * open_cost) // cores),
     )
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
     # openCostInBytes (4 MB default) would inflate small files past the
@@ -86,25 +85,95 @@ def _has_part_files(snap_dir: str) -> bool:
     return False
 
 
-def build_snapshot_plan(
-    spark: SparkSession, cfg: PipelineConfig, files: list[str]
-) -> DataFrame:
-    """The logical plan for one snapshot over ``files`` (no action run)."""
+def _read_documents(spark: SparkSession, mode: str, files: list[str]) -> DataFrame:
+    """(url, warc_ts, html binary, lang, src_file, ...) rows of ``files``."""
+    if mode == "warc":
+        from .warc import read_warc
+
+        return read_warc(spark, files)
+    if mode == "jsonl":
+        from .jsonl import read_jsonl
+
+        return read_jsonl(spark, files)
     _tune_input_splits(spark, files)
-    df = (
+    return (
         spark.read.parquet(*files)
         .withColumn("src_file", F.col("_metadata.file_path"))
         .drop("text")  # generator-provided expectation; we produce our own
     )
-    df = extract_documents(df, max_length=cfg.max_length)
+
+
+def build_snapshot_plan(
+    spark: SparkSession, cfg: PipelineConfig, files: list[str]
+) -> DataFrame:
+    """The logical plan for one documents/WARC/JSONL snapshot over
+    ``files`` (no action run)."""
+    df = extract_documents(
+        _read_documents(spark, cfg.mode, files), max_length=cfg.max_length
+    )
     if cfg.host_meta_path:
         host_meta = spark.read.parquet(cfg.host_meta_path)
         df = enrich_broadcast(df, host_meta)
     else:
         df = with_host(df)
-    for k, v in (cfg.static_fields or {}).items():
-        df = df.withColumn(k, F.lit(v))  # overwrites like the reference
-    return with_sink_id(df, cfg.n_sinks)
+    return with_sink_id(with_static_fields(df, cfg.static_fields), cfg.n_sinks)
+
+
+class DocsSource:
+    """Documents, WARC and JSONL shards: immutable files admitted whole
+    (file-granularity lineage), extracted, enriched and routed by url."""
+
+    refused: dict[str, str] = {}
+    reserved = ("src_file", "bytes_read", "sink_id")
+
+    def plan(self, store: LineageStore, cfg: PipelineConfig) -> list[str]:
+        return plan_new_files(store, cfg.input_glob)
+
+    def frame(self, spark: SparkSession, cfg: PipelineConfig, files: list[str]):
+        routed, obs = observed(build_snapshot_plan(spark, cfg, files))
+        # extracted_str is derivable (cast(extracted as string)) — writing it
+        # would double the payload bytes on every sink.
+        return routed.drop("html", "extracted_str"), obs
+
+    def audit(self, written, snapshot_id: int, files: list[str], obs):
+        # zero-row planned files still get a consumed marker
+        rows = lineage_rows_for(written, snapshot_id, planned_files=files)
+        if written is None:
+            # an all-empty snapshot ran zero output tasks → no observed row
+            metrics = {"rows": 0, "payload_bytes": 0, "approx_urls": 0}
+        else:
+            metrics = obs.get
+        return rows, {
+            "n_files": len(files),
+            "files": files if len(files) <= 8 else files[:3] + ["..."] + files[-1:],
+            "rows": int(metrics["rows"]),
+            "payload_bytes": int(metrics["payload_bytes"] or 0),
+            "approx_urls": int(metrics["approx_urls"]),
+        }
+
+
+def source_for(mode: str):
+    """The snapshot source for a pipeline mode (documents | warc | jsonl | tail)."""
+    if mode in ("documents", "warc", "jsonl"):
+        return DocsSource()
+    if mode == "tail":
+        from .tailsource import TailSource
+
+        return TailSource()
+    raise ValueError(f"unknown pipeline mode: {mode!r}")
+
+
+def check_config(cfg: PipelineConfig, source) -> None:
+    """Refuse a knob ``cfg.mode`` cannot honour, before any side effect."""
+    for knob, why in source.refused.items():
+        if getattr(cfg, knob):
+            raise ValueError(f"{knob} is not supported in {cfg.mode} mode: {why}")
+    clash = sorted(set(cfg.static_fields or ()) & set(source.reserved))
+    if clash:
+        raise ValueError(
+            f"static_fields {clash} would overwrite columns that {cfg.mode} "
+            "mode audits and routes by"
+        )
 
 
 def run_snapshot(
@@ -112,32 +181,53 @@ def run_snapshot(
     cfg: PipelineConfig,
     fail_before_commit: bool = False,
 ) -> dict:
-    """Process all not-yet-committed input files as one snapshot.
+    """Process all not-yet-committed input of ``cfg.mode`` as one snapshot.
 
-    Returns a summary dict; ``{"snapshot_id": None}`` when nothing new.
+    Returns a summary dict; ``{"snapshot_id": None, ...}`` when nothing new.
     ``fail_before_commit`` injects a crash between the sink write and the
     lineage publish (for the resume tests — the reference's
     crash-between-send-and-ack window, supervisor.go:191-219).
     """
-    import time as _time
+    return drive_snapshot(spark, cfg, source_for(cfg.mode), fail_before_commit)
 
-    t_start = _time.perf_counter()
+
+def run_warc_snapshot(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    fail_before_commit: bool = False,
+) -> dict:
+    """:func:`run_snapshot` over Common-Crawl-style WARC shards."""
+    return run_snapshot(spark, replace(cfg, mode="warc"), fail_before_commit)
+
+
+def drive_snapshot(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    source,
+    fail_before_commit: bool = False,
+) -> dict:
+    """One snapshot, whatever the source (the reference's one supervisor
+    loop, supervisor.go:98-249): plan → read → route → write → audit →
+    commit.  ``source`` supplies what differs per mode: ``plan`` (new
+    work from the lineage store), ``frame`` (the routed plan, plus
+    whatever its ``audit`` needs) and ``audit`` (lineage rows and summary
+    counters from the written output)."""
+    check_config(cfg, source)
+    t_start = time.perf_counter()
     store = LineageStore(cfg.checkpoint_dir)
     store.fence_attempt()  # fence out any abandoned watchdog attempt
-    files = plan_new_files(store, cfg.input_glob)
-    if not files:
-        return {"snapshot_id": None, "files": [], "rows": 0}
+    idle = {"snapshot_id": None, "files": [], "rows": 0}
+    work = source.plan(store, cfg)
+    if not work:
+        return idle
 
     snapshot_id = store.next_snapshot_id()
-    routed = build_snapshot_plan(spark, cfg, files)
-    routed, obs = observed(routed)
-    t_planned = _time.perf_counter()
+    routed, state = source.frame(spark, cfg, work)
+    t_planned = time.perf_counter()
 
     # One shuffle: co-locate by sink, spread within sink so a hot sink/host
     # never lands on a single reducer.
     if cfg.spread_partitions > 0:
-        from .route import spread_expr
-
         routed = routed.repartition(
             cfg.n_sinks * cfg.spread_partitions,
             F.col("sink_id"),
@@ -145,58 +235,85 @@ def run_snapshot(
         )
 
     snap_dir = os.path.join(cfg.output_dir, f"snapshot_id={snapshot_id}")
-    # extracted_str is derivable (cast(extracted as string)) — writing it
-    # would double the payload bytes on every sink.
-    (
-        routed.drop("html", "extracted_str")
-        .write.mode("overwrite")
-        .partitionBy("sink_id")
-        .parquet(snap_dir)
-    )
-    t_written = _time.perf_counter()
+    routed.write.mode("overwrite").partitionBy("sink_id").parquet(snap_dir)
+    t_written = time.perf_counter()
 
-    # Lineage from the written output (audit of what actually landed);
-    # zero-row planned files still get a consumed marker.  The empty
-    # case is detected EXPLICITLY (no part-files under snap_dir — an
-    # all-empty snapshot writes only _SUCCESS): any read failure on a
+    # Lineage from the written output (audit of what actually landed).
+    # The empty case is detected EXPLICITLY (no part-files under snap_dir
+    # — an empty write leaves only _SUCCESS): any read failure on a
     # data-bearing snapshot (transient FS error, corrupt footer) must
-    # propagate, never silently commit zero-row consumed markers
-    # (round-2 advice).  On an object store, list via the FS client.
-    if _has_part_files(snap_dir):
-        written = spark.read.parquet(snap_dir)
-        rows = lineage_rows_for(written, snapshot_id, planned_files=files)
-        metrics_empty = False
-    else:
-        rows = lineage_rows_for(None, snapshot_id, planned_files=files)
-        metrics_empty = True
+    # propagate, never silently commit zero-row consumed markers.  On an
+    # object store, list via the FS client.
+    written = spark.read.parquet(snap_dir) if _has_part_files(snap_dir) else None
+    rows, counters = source.audit(written, snapshot_id, work, state)
+    if not rows:
+        # nothing to commit (a tail whose new bytes hold only a partial
+        # line): an idle poll, not a failure
+        shutil.rmtree(snap_dir, ignore_errors=True)
+        return idle
+    hooks = {}
+    if written is not None:
+        hooks = _post_write_hooks(spark, cfg, store, snapshot_id, written)
 
-    # Cross-snapshot dedup hook: persist this snapshot's band index and
-    # probe the committed indexes (scones/incremental.py).  Runs before
-    # the lineage commit so the index is durable by the time the
-    # snapshot counts as committed; deterministic overwrite ⇒ a
-    # crash-retry rewrites identical files.
-    dedup_info: dict = {}
-    if cfg.dedup_index and not metrics_empty:
+    if fail_before_commit:
+        raise RuntimeError("injected crash between sink write and lineage commit")
+
+    store.commit(snapshot_id, rows)
+    t_done = time.perf_counter()
+    summary = {
+        "snapshot_id": snapshot_id,
+        **counters,
+        "output": snap_dir,
+        # phase walls: plan (serial driver), write (the parallel job),
+        # audit+commit (serial driver) — for the Amdahl analysis in
+        # BENCH/BASELINE.md; at 10^12 rows the serial phases are noise.
+        "plan_sec": t_planned - t_start,
+        "write_sec": t_written - t_planned,
+        "audit_commit_sec": t_done - t_written,
+        **hooks,
+    }
+    # durable counters (statistics.go parity, but surviving the process)
+    from .statsserver import persist_run_metrics
+
+    persist_run_metrics(cfg.checkpoint_dir, summary)
+    return summary
+
+
+def _post_write_hooks(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    store: LineageStore,
+    snapshot_id: int,
+    written: DataFrame,
+) -> dict:
+    """The dedup-index and LM-scoring hooks; both run before the lineage
+    commit so their side tables are durable by the time the snapshot
+    counts as committed, and both overwrite deterministically ⇒ a
+    crash-retry rewrites identical files."""
+    out: dict = {}
+    # Cross-snapshot dedup: persist this snapshot's band index and probe
+    # the committed indexes (scones/incremental.py).
+    if cfg.dedup_index:
         from .incremental import update_index_and_probe
 
-        dedup_info = update_index_and_probe(
-            spark,
-            cfg.checkpoint_dir,
-            cfg.output_dir,
-            snapshot_id,
-            written,
-            committed_ids=store.committed_snapshots(),
-            threshold=cfg.dedup_threshold,
+        out.update(
+            update_index_and_probe(
+                spark,
+                cfg.checkpoint_dir,
+                cfg.output_dir,
+                snapshot_id,
+                written,
+                committed_ids=store.committed_snapshots(),
+                threshold=cfg.dedup_threshold,
+            )
         )
 
-    # External-LM quality scoring hook (CCNet shape): when the config
-    # names a persisted model (scones.textops.save_lm layout), score
-    # this snapshot's extracted text against it and write the per-doc
-    # perplexity side table — deterministic overwrite, same crash-retry
-    # convention as the dedup index.  The model tables are vocab-sized
-    # (never corpus-sized); unseen text scores via add-one smoothing.
-    lm_info: dict = {}
-    if cfg.lm_model_path and not metrics_empty:
+    # External-LM quality scoring (CCNet shape): score this snapshot's
+    # extracted text against the persisted model (scones.textops.save_lm
+    # layout) and write the per-doc perplexity side table.  The model
+    # tables are vocab-sized (never corpus-sized); unseen text scores via
+    # add-one smoothing.
+    if cfg.lm_model_path:
         from .incremental import pipeline_doc_view
         from .textops import lm_perplexity, load_lm
 
@@ -208,169 +325,9 @@ def run_snapshot(
             cfg.checkpoint_dir, "lm_scores", f"snapshot_id={snapshot_id}"
         )
         scores.write.mode("overwrite").parquet(scores_dir)
-        lm_info = {
-            "lm_scores": scores_dir,
-            "n_scored": int(spark.read.parquet(scores_dir).count()),
-        }
-
-    if fail_before_commit:
-        raise RuntimeError("injected crash between sink write and lineage commit")
-
-    store.commit(snapshot_id, rows)
-    t_done = _time.perf_counter()
-    if metrics_empty:
-        # an all-empty snapshot ran zero output tasks → no observed row
-        metrics = {"rows": 0, "payload_bytes": 0, "approx_urls": 0}
-    else:
-        metrics = obs.get
-    summary = {
-        "snapshot_id": snapshot_id,
-        "n_files": len(files),
-        "files": files if len(files) <= 8 else files[:3] + ["..."] + files[-1:],
-        "rows": int(metrics["rows"]),
-        "payload_bytes": int(metrics["payload_bytes"] or 0),
-        "approx_urls": int(metrics["approx_urls"]),
-        "output": snap_dir,
-        # phase walls: plan (serial driver), write (the parallel job),
-        # audit+commit (serial driver) — for the Amdahl analysis in
-        # BENCH/BASELINE.md; at 10^12 rows the serial phases are noise.
-        "plan_sec": t_planned - t_start,
-        "write_sec": t_written - t_planned,
-        "audit_commit_sec": t_done - t_written,
-        **dedup_info,
-        **lm_info,
-    }
-    # durable counters (statistics.go parity, but surviving the process)
-    from .statsserver import persist_run_metrics
-
-    persist_run_metrics(cfg.checkpoint_dir, summary)
-    return summary
-
-
-def run_warc_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    fail_before_commit: bool = False,
-) -> dict:
-    """WARC-shard flavor of :func:`run_snapshot`: Common-Crawl-style
-    containers in, routed parquet sinks out, same lineage/commit
-    protocol (shards are immutable → file-granularity admission, like
-    the parquet path).
-    """
-    from .warc import read_warc
-
-    return _run_docs_snapshot(spark, cfg, read_warc, fail_before_commit)
-
-
-def run_jsonl_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    fail_before_commit: bool = False,
-) -> dict:
-    """JSONL-shard flavor (.jsonl / .jsonl.gz — the other common web-
-    corpus distribution format): same lineage/commit protocol; parsing
-    is fully JVM-side (see scones/jsonl.py)."""
-    from .jsonl import read_jsonl
-
-    return _run_docs_snapshot(spark, cfg, read_jsonl, fail_before_commit)
-
-
-def _run_docs_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    read_fn,
-    fail_before_commit: bool = False,
-) -> dict:
-    """Shared shard-source snapshot core: ``read_fn(spark, files)`` must
-    yield (url, warc_ts, html binary, lang, src_file, ...) rows; the
-    rest (extract → enrich → route → write → audit → lineage commit) is
-    identical across container formats."""
-    import time as _time
-
-    t_start = _time.perf_counter()
-    store = LineageStore(cfg.checkpoint_dir)
-    store.fence_attempt()  # fence out any abandoned watchdog attempt
-    files = plan_new_files(store, cfg.input_glob)
-    if not files:
-        return {"snapshot_id": None, "files": [], "rows": 0}
-    snapshot_id = store.next_snapshot_id()
-
-    docs = read_fn(spark, files)
-    df = extract_documents(docs, max_length=cfg.max_length)
-    if cfg.host_meta_path:
-        df = enrich_broadcast(df, spark.read.parquet(cfg.host_meta_path))
-    else:
-        df = with_host(df)
-    routed, obs = observed(with_sink_id(df, cfg.n_sinks))
-    t_planned = _time.perf_counter()
-
-    snap_dir = os.path.join(cfg.output_dir, f"snapshot_id={snapshot_id}")
-    (
-        routed.drop("html", "extracted_str")
-        .write.mode("overwrite")
-        .partitionBy("sink_id")
-        .parquet(snap_dir)
-    )
-    t_written = _time.perf_counter()
-
-    # same explicit empty-snapshot detection as run_snapshot (no bare
-    # except — real read failures propagate)
-    if _has_part_files(snap_dir):
-        written = spark.read.parquet(snap_dir)
-        rows = lineage_rows_for(written, snapshot_id, planned_files=files)
-        metrics_empty = False
-    else:
-        rows = lineage_rows_for(None, snapshot_id, planned_files=files)
-        metrics_empty = True
-    if fail_before_commit:
-        raise RuntimeError("injected crash between sink write and lineage commit")
-    store.commit(snapshot_id, rows)
-    t_done = _time.perf_counter()
-    if metrics_empty:
-        metrics = {"rows": 0, "payload_bytes": 0, "approx_urls": 0}
-    else:
-        metrics = obs.get
-    summary = {
-        "snapshot_id": snapshot_id,
-        "n_files": len(files),
-        "files": files if len(files) <= 8 else files[:3] + ["..."] + files[-1:],
-        "rows": int(metrics["rows"]),
-        "payload_bytes": int(metrics["payload_bytes"] or 0),
-        "approx_urls": int(metrics["approx_urls"]),
-        "output": snap_dir,
-        "plan_sec": t_planned - t_start,
-        "write_sec": t_written - t_planned,
-        "audit_commit_sec": t_done - t_written,
-    }
-    from .statsserver import persist_run_metrics
-
-    persist_run_metrics(cfg.checkpoint_dir, summary)
-    return summary
-
-
-def snapshot_fn_for_mode(mode: str):
-    """The per-mode snapshot runner (documents | tail | warc | jsonl)."""
-    if mode == "warc":
-        return run_warc_snapshot
-    if mode == "jsonl":
-        return run_jsonl_snapshot
-    if mode == "tail":
-        from .tailsource import run_tail_snapshot
-
-        def run_fn(spark_, cfg_):
-            return run_tail_snapshot(
-                spark_,
-                cfg_.input_glob,
-                cfg_.output_dir,
-                cfg_.checkpoint_dir,
-                n_sinks=cfg_.n_sinks,
-                max_length=cfg_.max_length,
-            )
-
-        return run_fn
-    if mode == "documents":
-        return run_snapshot
-    raise ValueError(f"unknown pipeline mode: {mode!r}")
+        out["lm_scores"] = scores_dir
+        out["n_scored"] = int(spark.read.parquet(scores_dir).count())
+    return out
 
 
 def run_from_config(
@@ -390,6 +347,8 @@ def run_from_config(
     Returns ``(summaries, stats_server_or_None)``; the caller owns
     stopping the server (it serves live state while the pipeline runs).
     """
+    # a config error fails once here, not once per daemon retry
+    check_config(cfg, source_for(cfg.mode))
     srv = None
     if cfg.stats_port is not None:
         from .statsserver import StatisticsServer
@@ -408,7 +367,6 @@ def run_from_config(
                 }
             )
     try:
-        run_fn = snapshot_fn_for_mode(cfg.mode)
         if cfg.daemon:
             from .backoff import run_daemon
 
@@ -416,7 +374,7 @@ def run_from_config(
             summaries = run_daemon(
                 spark,
                 cfg,
-                run_fn=run_fn,
+                run_fn=run_snapshot,
                 retry_min_sec=cfg.retry_min_sec,
                 retry_max_sec=cfg.retry_max_sec,
                 poll_min_sec=cfg.poll_min_sec,
@@ -430,7 +388,7 @@ def run_from_config(
                 **kwargs,
             )
         else:
-            summaries = [run_fn(spark, cfg)]
+            summaries = [run_snapshot(spark, cfg)]
     except BaseException:
         # don't leak the listener thread + bound port to callers that
         # never receive the handle (library/test invocations)

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import pyworker
+from .config import PipelineConfig
+from .enrich import with_static_fields
 from .lineage import LineageStore
 
 LINE_SCHEMA = (
@@ -219,6 +221,101 @@ def read_tail(
     return plan_df.mapInArrow(run, LINE_SCHEMA)
 
 
+class TailSource:
+    """The tail mode's part of the snapshot driver (scones.pipeline):
+    plan byte ranges past each file's high-water mark, frame them,
+    decorate (host, line_str) and route by crc32(file@hwm), then audit
+    per-file offsets from the written output.
+
+    The route key (src_file, hwm) is unique per line and a pure function
+    of content+provenance — deterministic under retries, unlike the
+    reference's competing-consumer chunk pickup."""
+
+    refused = {
+        "host_meta_path": "log lines carry no url to join on",
+        "spread_partitions": "tail units are written without a shuffle",
+        "dedup_index": "tail extracts no documents",
+        "lm_model_path": "tail extracts no documents",
+    }
+    reserved = (
+        "src_file", "bytes_read", "sink_id", "hwm", "line_no", "frame_end", "unit_start"
+    )
+
+    def __init__(self, max_range_bytes: int = 0):
+        self.max_range_bytes = max_range_bytes
+
+    def plan(self, store: LineageStore, cfg: PipelineConfig) -> list[tuple[str, int]]:
+        return plan_tail_work(store, cfg.input_glob)
+
+    def frame(self, spark: SparkSession, cfg: PipelineConfig, work: list[tuple[str, int]]):
+        lines = read_tail(
+            spark, work, max_length=cfg.max_length, max_range_bytes=self.max_range_bytes
+        )
+        routed = lines.select(
+            "src_file",
+            "line",
+            F.col("line").cast("string").alias("line_str"),
+            "hwm",
+            "line_no",
+            "frame_end",
+            "bytes_read",
+            "unit_start",
+            F.lit(os.uname().nodename).alias("host"),
+            F.pmod(
+                F.crc32(F.encode(F.concat("src_file", F.lit("@"), F.col("hwm").cast("string")), "utf-8")),
+                F.lit(cfg.n_sinks),
+            ).cast("int").alias("sink_id"),
+        )
+        # a static host overrides the hostname, as in the reference
+        return with_static_fields(routed, cfg.static_fields), None
+
+    def audit(self, written, snapshot_id: int, work: list[tuple[str, int]], _state):
+        if written is None:
+            # new bytes framed nothing complete (only a partial tail): no
+            # lineage row, replanned next snapshot (the ranged read makes
+            # that re-plan cost just the partial bytes)
+            return [], {}
+        # exact I/O accounting with range splitting: bytes_read is constant
+        # within a unit, so max-per-unit → sum-per-file is the total bytes
+        # the snapshot actually read from that file (round-2 advice: a bare
+        # per-file max reported one unit's cost when max_range_bytes > 0)
+        agg = (
+            written.groupBy("src_file", "unit_start")
+            .agg(
+                # sentinels (line_no = 0) don't count; line_no > 0 keeps the
+                # read-back off the line payload
+                F.count(F.when(F.col("line_no") > 0, 1)).alias("n"),
+                F.max("frame_end").alias("frame_end"),
+                F.max("bytes_read").alias("bytes_read"),
+            )
+            .groupBy("src_file")
+            .agg(
+                F.sum("n").alias("n"),
+                F.max("frame_end").alias("frame_end"),
+                F.sum("bytes_read").alias("bytes_read"),
+            )
+            .collect()
+        )
+        starts = dict(work)
+        rows = [
+            {
+                "snapshot_id": snapshot_id,
+                "src_file": r["src_file"],
+                "offset_start": starts.get(r["src_file"], 0),
+                "offset_end": int(r["frame_end"]),
+                "row_count": int(r["n"]),
+            }
+            for r in agg
+        ]
+        lines = int(sum(r["row_count"] for r in rows))
+        return rows, {
+            "lines": lines,
+            "rows": lines,
+            "files": [f for f, _ in work],
+            "bytes_read": {r["src_file"]: int(r["bytes_read"]) for r in agg},
+        }
+
+
 def run_tail_snapshot(
     spark: SparkSession,
     input_glob: str,
@@ -229,84 +326,13 @@ def run_tail_snapshot(
     max_range_bytes: int = 0,
     fail_before_commit: bool = False,
 ) -> dict:
-    """One incremental tail snapshot: frame new bytes → decorate
-    (host, line_str) → route by crc32(file|hwm) → write → commit offsets.
+    """One incremental tail snapshot: frame new bytes → decorate → route
+    → write → commit offsets (``scones.pipeline.run_snapshot`` in tail
+    mode, plus the ``max_range_bytes`` range split)."""
+    from .pipeline import drive_snapshot
 
-    The route key (src_file, hwm) is unique per line and a pure function
-    of content+provenance — deterministic under retries, unlike the
-    reference's competing-consumer chunk pickup."""
-    store = LineageStore(checkpoint_dir)
-    store.fence_attempt()  # fence out any abandoned watchdog attempt
-    work = plan_tail_work(store, input_glob)
-    if not work:
-        return {"snapshot_id": None, "lines": 0}
-    snapshot_id = store.next_snapshot_id()
-
-    lines = read_tail(
-        spark, work, max_length=max_length, max_range_bytes=max_range_bytes
+    cfg = PipelineConfig(
+        input_glob, output_dir, checkpoint_dir,
+        n_sinks=n_sinks, max_length=max_length, mode="tail",
     )
-    hostname = os.uname().nodename
-    routed = lines.select(
-        "src_file",
-        "line",
-        F.col("line").cast("string").alias("line_str"),
-        "hwm",
-        "line_no",
-        "frame_end",
-        "bytes_read",
-        "unit_start",
-        F.lit(hostname).alias("host"),
-        F.pmod(
-            F.crc32(F.encode(F.concat("src_file", F.lit("@"), F.col("hwm").cast("string")), "utf-8")),
-            F.lit(n_sinks),
-        ).cast("int").alias("sink_id"),
-    )
-    snap_dir = os.path.join(output_dir, f"snapshot_id={snapshot_id}")
-    routed.write.mode("overwrite").partitionBy("sink_id").parquet(snap_dir)
-
-    written = spark.read.parquet(snap_dir)
-    # exact I/O accounting with range splitting: bytes_read is constant
-    # within a unit, so max-per-unit → sum-per-file is the total bytes
-    # the snapshot actually read from that file (round-2 advice: a bare
-    # per-file max reported one unit's cost when max_range_bytes > 0)
-    agg = (
-        written.groupBy("src_file", "unit_start")
-        .agg(
-            # sentinels (line_no = 0) don't count; line_no > 0 keeps the
-            # read-back off the line payload
-            F.count(F.when(F.col("line_no") > 0, 1)).alias("n"),
-            F.max("frame_end").alias("frame_end"),
-            F.max("bytes_read").alias("bytes_read"),
-        )
-        .groupBy("src_file")
-        .agg(
-            F.sum("n").alias("n"),
-            F.max("frame_end").alias("frame_end"),
-            F.sum("bytes_read").alias("bytes_read"),
-        )
-        .collect()
-    )
-    if fail_before_commit:
-        raise RuntimeError("injected crash between sink write and offset commit")
-    starts = dict(work)
-    rows = [
-        {
-            "snapshot_id": snapshot_id,
-            "src_file": r["src_file"],
-            "offset_start": starts.get(r["src_file"], 0),
-            "offset_end": int(r["frame_end"]),
-            "row_count": int(r["n"]),
-        }
-        for r in agg
-    ]
-    # files whose new bytes framed nothing complete (only a partial tail)
-    # emit no rows at all — no lineage row, replanned next snapshot (the
-    # ranged read makes that re-plan cost just the partial bytes).
-    store.commit(snapshot_id, rows)
-    return {
-        "snapshot_id": snapshot_id,
-        "lines": int(sum(r["row_count"] for r in rows)),
-        "files": [f for f, _ in work],
-        "output": snap_dir,
-        "bytes_read": {r["src_file"]: int(r["bytes_read"]) for r in agg},
-    }
+    return drive_snapshot(spark, cfg, TailSource(max_range_bytes), fail_before_commit)

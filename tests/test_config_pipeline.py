@@ -8,9 +8,13 @@ import json
 import os
 import urllib.request
 
+import pytest
+
 from scones.config import PipelineConfig
 from scones.corpus import write_corpus, write_host_meta
-from scones.pipeline import run_from_config, snapshot_fn_for_mode
+from scones.pipeline import run_from_config
+
+MODES = ("documents", "warc", "jsonl", "tail")
 
 
 def test_operational_knobs_roundtrip_json(tmp_path):
@@ -37,20 +41,20 @@ def test_operational_knobs_roundtrip_json(tmp_path):
 
 
 def test_mode_dispatch_covers_all_formats():
-    import pytest
+    """Every mode has a source; an unknown mode raises ValueError."""
+    from scones.pipeline import DocsSource, source_for
+    from scones.tailsource import TailSource
 
-    from scones.pipeline import (
-        run_jsonl_snapshot,
-        run_snapshot,
-        run_warc_snapshot,
+    for mode in ("documents", "warc", "jsonl"):
+        assert isinstance(source_for(mode), DocsSource)
+    assert isinstance(source_for("tail"), TailSource)
+    with pytest.raises(ValueError, match="unknown pipeline mode"):
+        source_for("nope")
+    cfg = PipelineConfig(
+        input_glob="/x", output_dir="/y", checkpoint_dir="/z", mode="nope"
     )
-
-    assert snapshot_fn_for_mode("documents") is run_snapshot
-    assert snapshot_fn_for_mode("warc") is run_warc_snapshot
-    assert snapshot_fn_for_mode("jsonl") is run_jsonl_snapshot
-    assert callable(snapshot_fn_for_mode("tail"))
-    with pytest.raises(ValueError):
-        snapshot_fn_for_mode("nope")
+    with pytest.raises(ValueError, match="unknown pipeline mode"):
+        run_from_config(None, cfg)
 
 
 def test_config_driven_daemon_end_to_end(spark, tmp_path):
@@ -136,3 +140,143 @@ def test_lm_model_path_scoring_hook(spark, tmp_path):
     )
     s2 = run_snapshot(spark, cfg2)
     assert "lm_scores" not in s2 and "n_scored" not in s2
+
+
+KNOBS = (
+    "static_fields",
+    "spread_partitions",
+    "dedup_index",
+    "lm_model_path",
+    "host_meta_path",
+    "reserved_static_field",
+)
+TAIL_REFUSED = ("spread_partitions", "dedup_index", "lm_model_path", "host_meta_path")
+
+
+@pytest.fixture(scope="module")
+def lm_model(spark, tmp_path_factory):
+    from scones.textops import save_lm, train_lm
+
+    ref = spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog") for i in range(5)],
+        ["doc_id", "text"],
+    )
+    model_dir = str(tmp_path_factory.mktemp("lm") / "model")
+    save_lm(train_lm(ref), model_dir)
+    return model_dir
+
+
+def _write_mode_inputs(mode: str, in_dir) -> str:
+    """12 documents (or 12 log lines) in two files; returns the input glob."""
+    import base64
+
+    from scones.corpus import generate_rows
+    from scones.jsonl import write_jsonl
+    from scones.warc import write_warc
+
+    in_dir.mkdir()
+    if mode == "documents":
+        write_corpus(str(in_dir), n_docs=12, n_files=2, seed=71)
+        return str(in_dir / "*.parquet")
+    if mode == "tail":
+        for f in range(2):
+            (in_dir / f"app{f}.log").write_bytes(
+                b"".join(f"app{f} line {i}\n".encode() for i in range(6))
+            )
+        return str(in_dir / "*.log")
+    rows = generate_rows(12, seed=71)
+    for f, chunk in enumerate((rows[:6], rows[6:])):
+        if mode == "warc":
+            write_warc(str(in_dir / f"s{f}.warc.gz"), chunk, gzip_members=True)
+        else:
+            recs = [
+                {
+                    "url": r["url"],
+                    "ts": r["warc_ts"].strftime("%Y-%m-%dT%H:%M:%SZ"),
+                    "lang": r["lang"],
+                    "html_b64": base64.b64encode(r["html"]).decode(),
+                }
+                for r in chunk
+            ]
+            write_jsonl(str(in_dir / f"s{f}.jsonl"), recs)
+    return str(in_dir / ("*.warc.gz" if mode == "warc" else "*.jsonl"))
+
+
+@pytest.mark.parametrize("knob", KNOBS)
+@pytest.mark.parametrize("mode", MODES)
+def test_every_knob_takes_effect_or_is_refused(
+    spark, tmp_path, lm_model, monkeypatch, mode, knob
+):
+    """Each config knob behaves the same in every mode that can honour it,
+    and is refused before any side effect where it cannot."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    value = {
+        "static_fields": {"env": "prod", "host": "forced-host"},
+        "spread_partitions": 2,
+        "dedup_index": True,
+        "lm_model_path": lm_model,
+        "host_meta_path": str(tmp_path / "host_meta.parquet"),
+        # a static field must not overwrite what the audit and routing read
+        "reserved_static_field": {"hwm" if mode == "tail" else "src_file": "x"},
+    }[knob]
+    if knob == "host_meta_path":
+        write_host_meta(value)
+    cfg = PipelineConfig(
+        input_glob=_write_mode_inputs(mode, tmp_path / "in"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        n_sinks=2,
+        mode=mode,
+        **{"static_fields" if knob == "reserved_static_field" else knob: value},
+    )
+    if knob == "reserved_static_field" or (mode == "tail" and knob in TAIL_REFUSED):
+        name = next(iter(value)) if knob == "reserved_static_field" else knob
+        with pytest.raises(ValueError, match=f"{name}.*{mode}"):
+            run_from_config(spark, cfg)
+        assert not os.path.exists(cfg.checkpoint_dir)
+        return
+
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        plans.append(self._df._jdf.queryExecution().optimizedPlan().toString())
+        return orig(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    (s,), _ = run_from_config(spark, cfg)
+    assert s["snapshot_id"] == 1 and s["rows"] == 12
+    out = spark.read.parquet(s["output"])
+    if knob == "static_fields":
+        got = out.select("env", "host").distinct().collect()
+        assert [(r.env, r.host) for r in got] == [("prod", "forced-host")]
+    elif knob == "spread_partitions":
+        assert "RepartitionByExpression" in plans[0]
+        assert out.count() == 12
+    elif knob == "dedup_index":
+        assert "n_near_dup_pairs" in s
+        assert (tmp_path / "ckpt" / "band_index" / "snapshot_id=1").is_dir()
+    elif knob == "lm_model_path":
+        assert s["n_scored"] == 12
+    elif knob == "host_meta_path":
+        assert out.where("host_category IS NOT NULL").count() > 0
+
+
+def test_config_error_fails_once_not_per_daemon_retry(tmp_path):
+    """A knob the mode cannot honour raises before the daemon loop, which
+    would otherwise retry it forever."""
+    cfg = PipelineConfig(
+        input_glob=str(tmp_path / "*.log"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        mode="tail",
+        dedup_index=True,
+        daemon=True,
+    )
+    events = []
+    with pytest.raises(ValueError, match="dedup_index.*tail"):
+        run_from_config(
+            None, cfg, on_event=events.append, max_iterations=2, sleep_fn=lambda _: None
+        )
+    assert events == [] and not os.path.exists(cfg.checkpoint_dir)

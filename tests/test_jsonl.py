@@ -59,7 +59,7 @@ def test_jsonl_pipeline_mode_end_to_end(spark, tmp_path):
     framing + routing equality vs the oracle."""
     from scones.config import PipelineConfig
     from scones.oracle import extract_text
-    from scones.pipeline import run_jsonl_snapshot
+    from scones.pipeline import run_snapshot
 
     recs = _recs(0, 30)
     shards = tmp_path / "shards"
@@ -71,12 +71,13 @@ def test_jsonl_pipeline_mode_end_to_end(spark, tmp_path):
         output_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_sinks=3,
+        mode="jsonl",
     )
-    s1 = run_jsonl_snapshot(spark, cfg)
+    s1 = run_snapshot(spark, cfg)
     assert s1["snapshot_id"] == 1 and s1["rows"] == 20
-    assert run_jsonl_snapshot(spark, cfg)["snapshot_id"] is None  # no-op rerun
+    assert run_snapshot(spark, cfg)["snapshot_id"] is None  # no-op rerun
     write_jsonl(str(shards / "s2.jsonl"), recs[20:])
-    s3 = run_jsonl_snapshot(spark, cfg)
+    s3 = run_snapshot(spark, cfg)
     assert s3["rows"] == 10
 
     got = {
@@ -111,7 +112,7 @@ def test_export_jsonl_roundtrip(spark, tmp_path):
     ingestion contract)."""
     from scones.config import PipelineConfig
     from scones.export import export_jsonl
-    from scones.pipeline import run_jsonl_snapshot
+    from scones.pipeline import run_snapshot
 
     recs = _recs(0, 20)
     shards = tmp_path / "in"
@@ -121,8 +122,9 @@ def test_export_jsonl_roundtrip(spark, tmp_path):
         output_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_sinks=3,
+        mode="jsonl",
     )
-    s = run_jsonl_snapshot(spark, cfg)
+    s = run_snapshot(spark, cfg)
     snap_dir = str(tmp_path / "out" / "snapshot_id=1")
     res = export_jsonl(spark, snap_dir, str(tmp_path / "export"))
     assert res["rows"] == s["rows"] == 20

@@ -77,6 +77,37 @@ def test_growing_file_resumes_mid_file(spark, tmp_path):
     assert plan_tail_work(store, str(logs / "*.log")) == [(str(f), 34)]
 
 
+def test_partial_line_only_growth_is_an_idle_poll(spark, tmp_path):
+    """New bytes holding only a partial line frame nothing: the snapshot
+    commits nothing, writes no run record and leaves no output, instead
+    of failing to read back an empty write (which a daemon would retry
+    for as long as the writer holds the partial line)."""
+    from scones.statsserver import read_run_metrics
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    f = logs / "p.log"
+    f.write_bytes(b"line1\npartial")
+    s1 = _snap(spark, tmp_path)
+    assert s1["lines"] == s1["rows"] == 1
+    ckpt = str(tmp_path / "ckpt")
+    assert len(read_run_metrics(ckpt)) == 1  # tail runs leave a run record
+
+    assert _snap(spark, tmp_path)["snapshot_id"] is None
+    assert LineageStore(ckpt).committed_snapshots() == [1]
+    assert len(read_run_metrics(ckpt)) == 1
+    assert not (tmp_path / "out" / "snapshot_id=2").exists()
+
+    with open(f, "ab") as fh:
+        fh.write(b" done\n")
+    s3 = _snap(spark, tmp_path)
+    assert s3["snapshot_id"] == 2 and s3["lines"] == 1
+    assert _lines(spark, tmp_path) == [
+        ("p.log", b"line1", 6),
+        ("p.log", b"partial done", 19),
+    ]
+
+
 def test_max_length_skip_but_advance(spark, tmp_path):
     (tmp_path / "logs").mkdir()
     (tmp_path / "logs" / "long.log").write_bytes(b"long line\nline2\n")

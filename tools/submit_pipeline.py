@@ -20,10 +20,16 @@ from pyspark.sql import SparkSession
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--config", required=True)
-    p.add_argument("--mode", choices=["documents", "tail"], default="documents")
+    p.add_argument(
+        "--mode",
+        choices=["documents", "tail", "warc", "jsonl"],
+        default=None,
+        help="override the config's mode",
+    )
     a = p.parse_args()
 
     from scones.config import PipelineConfig
+    from scones.pipeline import run_snapshot
 
     spark = (
         SparkSession.builder.appName("scones-pipeline")
@@ -35,21 +41,9 @@ def main() -> None:
         .getOrCreate()
     )
     cfg = PipelineConfig.from_json(a.config)
-    if a.mode == "tail":
-        from scones.tailsource import run_tail_snapshot
-
-        summary = run_tail_snapshot(
-            spark,
-            cfg.input_glob,
-            cfg.output_dir,
-            cfg.checkpoint_dir,
-            n_sinks=cfg.n_sinks,
-            max_length=cfg.max_length,
-        )
-    else:
-        from scones.pipeline import run_snapshot
-
-        summary = run_snapshot(spark, cfg)
+    if a.mode is not None:
+        cfg.mode = a.mode
+    summary = run_snapshot(spark, cfg)
     print(summary)
     spark.stop()
 
